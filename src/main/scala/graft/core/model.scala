@@ -78,7 +78,6 @@ final case class LoadingConfig(
     timestampColumn: Option[String] = None,
     timeFormat: String = "dd/MM/yyyy HH:mm", // reference "%d/%m/%Y %H:%M"
     encoding: String = "utf-8",
-    parseDates: Boolean = false,
     // reference dateparser DATE_ORDER (load_file.py:1945,1976): resolves
     // ambiguous numeric dates like 01/02/2024; DMY is the reference default
     dateOrder: String = "DMY" // "DMY" | "MDY" | "YMD"

@@ -1,7 +1,8 @@
 package graft.load
 
-import graft.core.FileMetadata
-import org.apache.spark.sql.DataFrame
+import graft.core.LoadingConfig
+import java.util.regex.Pattern
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Extension points (reference ts_extensions.py:14-75 + registry
@@ -9,33 +10,39 @@ import org.apache.spark.sql.functions._
   * Catalyst expressions — per the survey (§2.11) nothing in the reference
   * needs a custom Catalyst node; hooks stay declarative so Catalyst still
   * optimizes through them.
+  *
+  * DataTransformer: a whole-frame transform, applied once per load before
+  * the timestamp parse (reference ts_extensions.py:14-29, there called once
+  * per file). `df` holds every loaded row: the CSV columns, all strings,
+  * plus the per-file metadata columns `TimeSeriesLoader.MetaColumns`
+  * (source_file, file_start_time, file_end_time), so per-file logic keys on
+  * those columns. `loading` is the loader's configuration (e.g. its decimal
+  * separator). A timestamp column the transform leaves as a string is parsed
+  * after it.
   */
 trait DataTransformer extends Serializable {
-  def transform(df: DataFrame, timestampColumn: Option[String], meta: FileMetadata): DataFrame
+  def transform(df: DataFrame, timestampColumn: Option[String], loading: LoadingConfig): DataFrame
 }
 
-/** Default transform (reference ts_extensions.py:32-49 / P4): every
-  * non-timestamp column numeric-coerced (cast-to-double = pd.to_numeric
-  * errors="coerce": garbage -> null), then per-file constant metadata columns
-  * appended as literals (explicit per-file lit beats input_file_name() for
-  * error attribution; survey §7.4 #9).
+/** Default transform (reference ts_extensions.py:32-49 / P4): every column
+  * except the timestamp and metadata columns becomes a double.
   */
 class DefaultDataTransformer extends DataTransformer {
   override def transform(
       df: DataFrame,
       timestampColumn: Option[String],
-      meta: FileMetadata
+      loading: LoadingConfig
   ): DataFrame = {
-    // try_cast, not cast: ANSI mode (Spark 4 default) makes plain cast THROW
-    // on malformed input; to_numeric(errors="coerce") semantics require null
-    val coerced = df.columns.foldLeft(df) { (acc, c) =>
-      if (timestampColumn.contains(c)) acc
-      else acc.withColumn(c, col(c).try_cast("double"))
+    // try_cast = pd.to_numeric(errors="coerce"): garbage -> null (plain cast
+    // THROWS under Spark 4 ANSI mode). Non-"." decimal separators (e.g.
+    // European "21,5") normalize before the cast (survey §7.4 #8).
+    def numeric(c: Column) =
+      if (loading.decimal == ".") c.try_cast("double")
+      else regexp_replace(c, Pattern.quote(loading.decimal), ".").try_cast("double")
+    df.columns.foldLeft(df) { (acc, c) =>
+      if (timestampColumn.contains(c) || TimeSeriesLoader.MetaColumns(c)) acc
+      else acc.withColumn(c, numeric(col(c)))
     }
-    coerced
-      .withColumn("source_file", lit(new java.io.File(meta.filepath).getName))
-      .withColumn("file_start_time", lit(meta.startTime.orNull))
-      .withColumn("file_end_time", lit(meta.endTime.orNull))
   }
 }
 
@@ -105,15 +112,15 @@ class OutlierRemovalHook(columns: Seq[String], threshold: Double = 3.0)
   }
 }
 
-/** Per-file timestamp normalization example hook analogue (reference
+/** Timestamp normalization example transformer (reference
   * ts_extensions.py:128-161): parse a string column to timestamp with a
-  * strict format.
+  * strict format. It replaces the default numeric coercion.
   */
 class TimestampNormalizer(column: String, format: String) extends DataTransformer {
   override def transform(
       df: DataFrame,
       timestampColumn: Option[String],
-      meta: FileMetadata
+      loading: LoadingConfig
   ): DataFrame =
     if (df.columns.contains(column))
       df.withColumn(column, to_timestamp(col(column), format))

@@ -38,6 +38,10 @@ object PipelineBuilder {
     def withMetadataExtractor(e: MetadataExtractor): Builder = { extractor = e; this }
     def withFileFilter(f: FileFilter): Builder = { fileFilter = Some(f); this }
     def withContentValidator(v: FileValidator): Builder = { contentValidator = Some(v); this }
+    /** Replaces the default numeric coercion. Called once per load on the
+      * whole string-typed frame, per-file metadata in columns; see
+      * DataTransformer.
+      */
     def withTransformer(t: DataTransformer): Builder = { transformer = t; this }
     /** Hooks chain in registration order (reference load_file.py:1853-1861). */
     def addHook(h: PostProcessingHook): Builder = { hooks = hooks :+ h; this }

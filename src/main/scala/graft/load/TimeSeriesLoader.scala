@@ -6,9 +6,9 @@ import graft.validate.{FileValidator, TimeSeriesValidator}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.io.{BufferedReader, ByteArrayInputStream, InputStream, InputStreamReader}
 import java.nio.file.{Files, Path, Paths}
-import java.time.Duration
-import scala.jdk.CollectionConverters._
+import java.util.regex.Pattern
 
 /** Loaded-corpus result (reference FileDataFrame.get_dataframe +
   * concat_metadata, load_file.py:1863-1878).
@@ -70,20 +70,23 @@ final case class LoadedSeries(
 
 /** The flagship pipeline (reference FileDataFrame.initialize_processing,
   * load_file.py:1263-1323): discover -> extract metadata -> validate
-  * sequence -> load CSVs -> coerce -> attach metadata -> union -> parse
-  * timestamps -> sort -> clean names -> hooks.
+  * sequence -> check headers -> read as strings + attach metadata ->
+  * transform (coerce) -> parse timestamps -> sort -> clean names -> hooks.
   *
   * Spark-first shape (NOT the reference's per-file pandas loop):
-  *   - steps 1-3 are metadata-plane and stay on the driver (file listing is
-  *     driver work in Spark too); row data NEVER lands on the driver;
-  *   - the read is ONE multi-path csv scan with an enforced schema (so
+  *   - steps 1-3 and the header check are metadata-plane and stay on the
+  *     driver (file listing is driver work in Spark too); row data NEVER
+  *     lands on the driver;
+  *   - files read as ONE multi-path csv scan with an enforced schema (so
   *     Catalyst sees a single scan node: column pruning, limit pushdown and
   *     partition-level parallelism all apply), not N unioned per-file plans
   *     whose lineage would grow O(files);
   *   - per-file constants (source_file, file_start_time, file_end_time)
   *     attach via a BROADCAST join on input_file_name() against the tiny
-  *     metadata table — no shuffle;
-  *   - the optional global time sort is the only wide exchange.
+  *     metadata table — no shuffle; uploads attach them as literals;
+  *   - every source then goes through the same step (`finish`): the
+  *     transformer, the timestamp parse, the optional global time sort (the
+  *     only wide exchange), column cleaning and the hooks.
   */
 class TimeSeriesLoader(
     spark: SparkSession,
@@ -96,8 +99,7 @@ class TimeSeriesLoader(
     contentValidator: Option[FileValidator] = None,
     transformer: DataTransformer = new DefaultDataTransformer(),
     hooks: Seq[PostProcessingHook] = Nil,
-    sortByTimestamp: Boolean = true,
-    enforceStructure: Boolean = true
+    sortByTimestamp: Boolean = true
 ) {
   private val errors = new ErrorCollector
 
@@ -107,14 +109,13 @@ class TimeSeriesLoader(
   /** Steps 1-3: discovery + metadata + sequence validation. */
   def discoverAndValidate(basePath: String): (Seq[FileMetadata], DiscoveryStats) = {
     val res = Discovery.discover(basePath, discovery, filt, contentValidator)
-    val metas = Discovery.extractAll(res.files, extractor, errors)
-    validateSequence(metas)
-    (metas, res.stats)
+    (extractAndValidate(res.files), res.stats)
   }
 
-  private def validateSequence(metas: Seq[FileMetadata]): Unit = {
-    val validator = new TimeSeriesValidator(tsConfig)
-    val verdict = validator.isValidSequence(metas)
+  /** Steps 2-3 for every source: filename metadata, then sequence validation. */
+  private def extractAndValidate(files: Seq[Path]): Seq[FileMetadata] = {
+    val metas = Discovery.extractAll(files, extractor, errors)
+    val verdict = new TimeSeriesValidator(tsConfig).isValidSequence(metas)
     if (!verdict.isValid) {
       errors.add(ProcessingError(
         verdict.errorMessage.getOrElse("time-series validation failed"),
@@ -122,6 +123,7 @@ class TimeSeriesLoader(
       if (tsConfig.failOnValidationError)
         throw new TimeValidationException(verdict.errorMessage.getOrElse("invalid sequence"))
     }
+    metas
   }
 
   /** Full pipeline from a directory. */
@@ -133,109 +135,107 @@ class TimeSeriesLoader(
   /** Full pipeline from an explicit file list (S2). */
   def loadPaths(paths: Seq[String]): LoadedSeries = {
     val res = Discovery.fromFiles(paths, filt, contentValidator)
-    val metas = Discovery.extractAll(res.files, extractor, errors)
-    validateSequence(metas)
-    loadFiles(metas, Some(res.stats))
+    loadFiles(extractAndValidate(res.files), Some(res.stats))
   }
 
-  /** In-memory uploads (S3): batch source from (name, bytes) pairs. */
+  /** In-memory uploads (S3): batch source from (name, bytes) pairs, checked
+    * and typed exactly like files.
+    */
   def loadUploads(uploads: Seq[(String, Array[Byte])]): LoadedSeries = {
     import spark.implicits._
     val valid = Discovery.fromUploads(uploads, extractor)
-    val metas = valid.map { case (name, _) =>
-      scala.util.Try(extractor.extractMetadata(Paths.get(name)))
-        .getOrElse(FileMetadata(name))
-    }
-    validateSequence(metas)
-    val perFile = valid.zip(metas).map { case ((name, bytes), meta) =>
-      val lines = new String(bytes, loading.encoding).linesIterator.toSeq
-      val ds = spark.createDataset(lines)
-      val raw = csvReader().csv(ds)
-      finishOne(raw, meta)
-    }
-    assemble(perFile, metas, None)
+    val metas = extractAndValidate(valid.map(u => Paths.get(u._1)))
+    val metaOf = metas.map(m => m.filepath -> m).toMap
+    val headers = enforceHeaders(valid.map { case (name, bytes) =>
+      name -> (() => new ByteArrayInputStream(bytes))
+    })
+    val raw = valid.zip(headers)
+      .map { case ((name, bytes), header) =>
+        val meta = metaOf(Paths.get(name).toString)
+        val lines = spark.createDataset(new String(bytes, loading.encoding).linesIterator.toSeq)
+        csvReader(header).csv(lines)
+          .withColumn("source_file", lit(new java.io.File(name).getName))
+          .withColumn("file_start_time", lit(meta.startTime.orNull).cast(TimestampType))
+          .withColumn("file_end_time", lit(meta.endTime.orNull).cast(TimestampType))
+      }
+      .reduce(_.unionByName(_))
+    finish(raw, headers.head, metas, None)
   }
 
-  private def csvReader() =
+  /** All-string schema: typing is the transformer's job, so garbage cells
+    * coerce to null there instead of failing the scan.
+    */
+  private def csvReader(header: Seq[String]) =
     spark.read
       .option("sep", loading.delimiter)
       .option("header", "true")
       .option("encoding", loading.encoding)
       .option("mode", "PERMISSIVE")
+      .schema(StructType(header.map(c => StructField(c, StringType, nullable = true))))
 
-  /** S5: header of the first file without reading data (manual limit
-    * pushdown, reference nrows=0 at load_file.py:1727).
+  /** S5: header of a file from a bounded read of its first lines, not a
+    * scan (manual limit pushdown, reference nrows=0 at load_file.py:1727).
     */
-  def originalColumnNames(path: String): Seq[String] = headerOf(Paths.get(path))
+  def originalColumnNames(path: String): Seq[String] =
+    probe(path, Files.newInputStream(Paths.get(path)))._1
 
-  private def headerOf(p: Path): Seq[String] = {
-    val s = Files.lines(p)
+  /** One bounded read of a source, decoded with `loading.encoding`: its
+    * trimmed header, and per-column numeric-ness from the first 10 data
+    * lines (Some(true)=all non-empty values parse as double, Some(false)=some
+    * don't, None=no data observed).
+    */
+  private def probe(name: String, in: InputStream): (Seq[String], Seq[Option[Boolean]]) = {
+    val sep = Pattern.quote(loading.delimiter)
+    val dec = Pattern.quote(loading.decimal)
     try {
-      val it = s.iterator()
-      if (!it.hasNext) throw new DataLoadingException(s"File is empty: $p")
-      it.next().split(java.util.regex.Pattern.quote(loading.delimiter)).map(_.trim).toSeq
-    } finally s.close()
-  }
-
-  /** P5: per-file header + dtype enforcement against file #1 (reference
-    * load_file.py:1489-1531: column mismatch at :1513-1522, np.issubdtype
-    * dtype mismatch at :1525-1531). Header/probe reads only — metadata-plane
-    * cost, the data itself is scanned exactly once, later. Returns every
-    * file's ordered header: a file with the same column SET in a different
-    * ORDER is legal (pandas concat aligns by name) but must get its own
-    * positional schema at read time — see loadFiles.
-    */
-  private def enforceHeaders(metas: Seq[FileMetadata]): Seq[Seq[String]] = {
-    val headers = metas.map(m => headerOf(Paths.get(m.filepath)))
-    val ref = headers.head
-    if (enforceStructure) {
-      val refNumeric = ref.zip(probeNumeric(Paths.get(metas.head.filepath), ref.size)).toMap
-      metas.tail.zip(headers.tail).foreach { case (m, h) =>
-        if (h.toSet != ref.toSet) {
-          val msg = s"Column mismatch in ${m.filepath}: expected ${ref.mkString(",")} got ${h.mkString(",")}"
-          errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-          throw new DataLoadingException(msg)
-        }
-        val thisNumeric = probeNumeric(Paths.get(m.filepath), h.size)
-        // compare BY NAME (not position): reordered files align by name at
-        // read time, so only a column flipping numeric<->non-numeric under
-        // its own name is the reference's "Data type mismatch"
-        h.zip(thisNumeric).foreach { case (cname, tn) =>
-          (refNumeric(cname), tn) match {
-            case (Some(a), Some(b)) if a != b =>
-              val msg = s"Data type mismatch in ${m.filepath}: column '$cname'"
-              errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(m.filepath)))
-              throw new DataLoadingException(msg)
-            case _ => () // no data observed on one side -> cannot judge
-          }
-        }
-      }
-    }
-    headers
-  }
-
-  /** Per-column numeric-ness from the first `probeRows` data lines:
-    * Some(true)=all non-empty values parse as double, Some(false)=some
-    * don't, None=no data observed. Bounded read (limit-pushdown probe).
-    */
-  private def probeNumeric(p: Path, nCols: Int, probeRows: Int = 10): Seq[Option[Boolean]] = {
-    val sep = java.util.regex.Pattern.quote(loading.delimiter)
-    val dec = java.util.regex.Pattern.quote(loading.decimal)
-    val s = Files.lines(p)
-    try {
-      val rows = s.iterator().asScala.drop(1).take(probeRows)
-        .map(_.split(sep, -1).map(_.trim).padTo(nCols, "")).toVector
-      (0 until nCols).map { i =>
+      val reader = new BufferedReader(new InputStreamReader(in, loading.encoding))
+      val lines = Iterator.continually(reader.readLine()).takeWhile(_ != null)
+      if (!lines.hasNext) throw new DataLoadingException(s"File is empty: $name")
+      val header = lines.next().split(sep).map(_.trim).toSeq
+      val rows = lines.take(10)
+        .map(_.split(sep, -1).map(_.trim).padTo(header.size, "")).toVector
+      val numeric = header.indices.map { i =>
         val vals = rows.map(_(i)).filter(_.nonEmpty)
         if (vals.isEmpty) None
         else Some(vals.forall(v =>
           scala.util.Try(v.replaceAll(dec, ".").toDouble).isSuccess))
       }
-    } finally s.close()
+      (header, numeric)
+    } finally in.close()
   }
 
-  private def detectTimestampColumn(header: Seq[String]): Option[String] =
-    loading.timestampColumn.orElse(header.find(_.toLowerCase.contains("time")))
+  /** P5: per-source header + dtype enforcement against source #1 (reference
+    * load_file.py:1489-1531: column mismatch at :1513-1522, np.issubdtype
+    * dtype mismatch at :1525-1531). Each source is opened once, for its
+    * header and probe rows; the data itself is scanned later, by Spark.
+    * Returns every source's ordered header: a file with the same column SET
+    * in a different ORDER is legal (pandas concat aligns by name) but must
+    * get its own positional schema at read time — see loadFiles.
+    */
+  private def enforceHeaders(sources: Seq[(String, () => InputStream)]): Seq[Seq[String]] = {
+    val probes = sources.map { case (name, open) => probe(name, open()) }
+    val (ref, refTypes) = probes.head
+    val refNumeric = ref.zip(refTypes).toMap
+    def fail(name: String, msg: String): Nothing = {
+      errors.add(ProcessingError(msg, ErrorSeverity.Error, "DataLoadingError", Some(name)))
+      throw new DataLoadingException(msg)
+    }
+    sources.map(_._1).zip(probes).tail.foreach { case (name, (header, numeric)) =>
+      if (header.toSet != ref.toSet)
+        fail(name, s"Column mismatch in $name: expected ${ref.mkString(",")} got ${header.mkString(",")}")
+      // compare BY NAME (not position): reordered files align by name at
+      // read time, so only a column flipping numeric<->non-numeric under
+      // its own name is the reference's "Data type mismatch"
+      header.zip(numeric).foreach { case (cname, tn) =>
+        (refNumeric(cname), tn) match {
+          case (Some(a), Some(b)) if a != b =>
+            fail(name, s"Data type mismatch in $name: column '$cname'")
+          case _ => () // no data observed on one side -> cannot judge
+        }
+      }
+    }
+    probes.map(_._1)
+  }
 
   /** Steps 4+: one scan per distinct header ordering (one scan, period, in
     * the overwhelmingly common identical-headers case) + broadcast metadata
@@ -247,20 +247,16 @@ class TimeSeriesLoader(
   def loadFiles(metas: Seq[FileMetadata], stats: Option[DiscoveryStats]): LoadedSeries = {
     import spark.implicits._
     require(metas.nonEmpty, "no files to load")
-    val headers = enforceHeaders(metas)
-    val tsColRaw = detectTimestampColumn(headers.head)
+    val headers = enforceHeaders(metas.map(m =>
+      m.filepath -> (() => Files.newInputStream(Paths.get(m.filepath)))))
 
     // group by ordered header, preserving first-appearance order so the
     // result's column order is file #1's order (pandas concat parity)
     val grouped: Seq[(Seq[String], Seq[String])] = headers.distinct.map { h =>
       (h, metas.zip(headers).collect { case (m, hh) if hh == h => m.filepath })
     }
-    // all-string schema: coercion below reproduces to_numeric(errors=coerce)
     val raw = grouped
-      .map { case (h, paths) =>
-        val schema = StructType(h.map(c => StructField(c, StringType, nullable = true)))
-        csvReader().schema(schema).csv(paths: _*)
-      }
+      .map { case (h, paths) => csvReader(h).csv(paths: _*) }
       .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
 
     // per-file metadata via broadcast join (no shuffle, no O(files) plan).
@@ -269,58 +265,68 @@ class TimeSeriesLoader(
     // "file:/a/b c.csv" — raw strings never match. url_decode alone is
     // FORM-decoding ('+' -> space, stray '%' throws under ANSI); protect
     // '+' first and fall back to the raw name on undecodable input.
+    // The join key is a 64-bit hash of that path, not the path itself: a
+    // long key broadcasts as a LongHashedRelation (about 1 MB on the
+    // driver), a string key as an UnsafeHashedRelation that holds a whole
+    // Tungsten page (16 MB at a 2 GB heap) until the broadcast is cleaned,
+    // so driver memory would swing with GC timing. The path comparison
+    // after the join keeps the match exact if two paths share a hash.
     val metaDf = broadcast(
       metas
         .map(m => (new java.io.File(m.filepath).getAbsolutePath,
           new java.io.File(m.filepath).getName,
           m.startTime.orNull, m.endTime.orNull))
-        .toDF("__path", "source_file", "file_start_time", "file_end_time")
+        .toDF("__mpath", "source_file", "file_start_time", "file_end_time")
+        .withColumn("__key", xxhash64(col("__mpath")))
     )
     val decodedName = coalesce(
       expr("""try_url_decode(regexp_replace(input_file_name(), '\\+', '%2B'))"""),
       input_file_name())
     val withMeta = raw
       .withColumn("__path", regexp_replace(decodedName, "^file:/+", "/"))
-      .join(metaDf, Seq("__path"), "left")
-      .drop("__path")
-
-    val transformed = applyTransform(withMeta, tsColRaw)
-    assemble(Seq(transformed), metas, stats, alreadyUnioned = true, tsColRaw)
+      .withColumn("__key", xxhash64(col("__path")))
+      .join(metaDf, Seq("__key"), "left")
+      .where(col("__mpath").isNull || col("__mpath") === col("__path"))
+      .drop("__key", "__path", "__mpath")
+    finish(withMeta, headers.head, metas, stats)
   }
 
-  private def finishOne(raw: DataFrame, meta: FileMetadata): DataFrame = {
-    val tsColRaw = detectTimestampColumn(raw.columns.toSeq)
-    applyTransform(transformer.transform(raw, tsColRaw, meta), tsColRaw, skipTransformer = true)
-  }
-
-  private def applyTransform(
-      df: DataFrame,
-      tsColRaw: Option[String],
-      skipTransformer: Boolean = false
-  ): DataFrame = {
-    val metaCols = Set("source_file", "file_start_time", "file_end_time")
-    val base =
-      if (skipTransformer) df
-      else {
-        // inline DefaultDataTransformer semantics over the single scan;
-        // try_cast = pd.to_numeric(errors="coerce"): garbage -> null (plain
-        // cast THROWS under Spark 4 ANSI mode). Non-"." decimal separators
-        // (e.g. European "21,5") normalize before the cast (survey §7.4 #8).
-        def numeric(c: org.apache.spark.sql.Column) =
-          if (loading.decimal == ".") c.try_cast("double")
-          else regexp_replace(c,
-            java.util.regex.Pattern.quote(loading.decimal), ".").try_cast("double")
-        df.columns.foldLeft(df) { (acc, c) =>
-          if (tsColRaw.contains(c) || metaCols(c)) acc
-          else acc.withColumn(c, numeric(col(c)))
-        }
-      }
-    tsColRaw match {
-      case Some(tc) if base.schema(tc).dataType == StringType =>
+  /** The step every source shares. `raw` holds the sources' columns as
+    * strings plus the metadata columns; `header` is source #1's. The
+    * timestamp column is detected once, from that header.
+    */
+  private def finish(
+      raw: DataFrame,
+      header: Seq[String],
+      metas: Seq[FileMetadata],
+      stats: Option[DiscoveryStats]
+  ): LoadedSeries = {
+    val tsCol = loading.timestampColumn.orElse(header.find(_.toLowerCase.contains("time")))
+    val transformed = transformer.transform(raw, tsCol, loading)
+    val parsed = tsCol match {
+      case Some(tc) if transformed.schema(tc).dataType == StringType =>
         // F1 strict parse with F2-style coalesce fallback over common formats
-        base.withColumn(tc, parseTimestamp(col(tc)))
-      case _ => base
+        transformed.withColumn(tc, parseTimestamp(col(tc)))
+      case _ => transformed
     }
+    val sorted = tsCol match { // O1: global sort
+      case Some(tc) if sortByTimestamp => parsed.orderBy(col(tc))
+      case _ => parsed
+    }
+    val renamed = sorted.toDF(
+      sorted.columns.toIndexedSeq.map(c => if (TimeSeriesLoader.MetaColumns(c)) c else cleanName(c)): _*)
+    // one accumulating context shared by every hook in the chain (reference
+    // threads a single dict, ts_extensions.py:58-75, load_file.py:1853-1861)
+    val context = scala.collection.mutable.Map.empty[String, Any]
+    val hooked = hooks.foldLeft(renamed) { (acc, h) =>
+      try h.process(acc, context)
+      catch {
+        case e: Exception => // hook errors logged, pipeline continues (ts_extensions.py:70-75)
+          errors.add(ProcessingError(e.getMessage, ErrorSeverity.Warning, "HookError"))
+          acc
+      }
+    }
+    LoadedSeries(hooked, metas, tsCol.map(cleanName), errors, stats, context.toMap)
   }
 
   /** F1/F2: strict format first, then an ordered coalesce of common formats
@@ -350,44 +356,6 @@ class TimeSeriesLoader(
     coalesce(fallbacks.map(f => try_to_timestamp(trim(c), lit(f))): _*)
   }
 
-  private def assemble(
-      parts: Seq[DataFrame],
-      metas: Seq[FileMetadata],
-      stats: Option[DiscoveryStats],
-      alreadyUnioned: Boolean = false,
-      tsColKnown: Option[String] = None
-  ): LoadedSeries = {
-    val unioned =
-      if (alreadyUnioned) parts.head
-      else parts.reduce(_.unionByName(_)) // U1; schemas pre-validated equal
-
-    // O1: timestamp detection + global sort
-    val tsCol = tsColKnown.orElse(
-      unioned.columns.find(c =>
-        c.toLowerCase.contains("time") && !Set("file_start_time", "file_end_time")(c) &&
-          unioned.schema(c).dataType == TimestampType)
-    )
-    val sorted = (tsCol, sortByTimestamp) match {
-      case (Some(tc), true) => unioned.orderBy(col(tc))
-      case _ => unioned
-    }
-
-    val renamed = applyNaming(sorted)
-    val tsRenamed = tsCol.map(cleanName)
-    // one accumulating context shared by every hook in the chain (reference
-    // threads a single dict, ts_extensions.py:58-75, load_file.py:1853-1861)
-    val context = scala.collection.mutable.Map.empty[String, Any]
-    val hooked = hooks.foldLeft(renamed) { (acc, h) =>
-      try h.process(acc, context)
-      catch {
-        case e: Exception => // hook errors logged, pipeline continues (ts_extensions.py:70-75)
-          errors.add(ProcessingError(e.getMessage, ErrorSeverity.Warning, "HookError"))
-          acc
-      }
-    }
-    LoadedSeries(hooked, metas, tsRenamed, errors, stats, context.toMap)
-  }
-
   private def cleanName(c: String): String = {
     val stripped = if (naming.stripWhitespace) c.trim else c // C1
     val renamed = naming.renameMap.getOrElse(stripped, stripped) // C2
@@ -396,10 +364,9 @@ class TimeSeriesLoader(
       parts.last.trim
     } else renamed
   }
+}
 
-  private def applyNaming(df: DataFrame): DataFrame = {
-    val metaCols = Set("source_file", "file_start_time", "file_end_time")
-    val newNames = df.columns.toIndexedSeq.map(c => if (metaCols(c)) c else cleanName(c))
-    df.toDF(newNames: _*)
-  }
+object TimeSeriesLoader {
+  /** The per-file metadata columns every loaded frame carries. */
+  val MetaColumns: Set[String] = Set("source_file", "file_start_time", "file_end_time")
 }

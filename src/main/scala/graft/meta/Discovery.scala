@@ -90,8 +90,8 @@ object Discovery {
   }
 
   /** S3: in-memory "uploaded" sources (name, bytes) — a batch in-memory
-    * source (reference load_file.py:889-954). Returns (name, content) pairs
-    * that CsvPipeline can read via spark.createDataset of lines.
+    * source (reference load_file.py:889-954). Returns the (name, content)
+    * pairs that TimeSeriesLoader.loadUploads reads, sorted by name.
     */
   def fromUploads(
       uploads: Seq[(String, Array[Byte])],

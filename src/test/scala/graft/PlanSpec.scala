@@ -82,6 +82,9 @@ class PlanSpec extends SparkSpec {
     val plan = loaded.df.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"metadata attach not broadcast:\n$plan")
     assert(!plan.contains("SortMergeJoin"), "metadata attach must not shuffle")
+    // a long key, so the driver keeps a LongHashedRelation, not a 16 MB page
+    assert("""HashedRelationBroadcastMode\(List\(input\[\d+, bigint""".r.findFirstIn(plan).isDefined,
+      s"metadata broadcast not keyed by a long:\n$plan")
   }
 
   test("co-bucketed tables join WITHOUT a shuffle exchange") {

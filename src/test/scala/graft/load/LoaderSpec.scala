@@ -4,8 +4,10 @@ import graft.SparkSpec
 import graft.core._
 import graft.meta.{Discovery, TimeMetadataExtractor}
 import java.nio.file.{Files, Path}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
+import scala.jdk.CollectionConverters._
 
 /** End-to-end CSV pipeline parity (the reference's flagship
   * initialize_processing; tests/test_load_file.py:890-897, 1336-1352 pins:
@@ -29,6 +31,13 @@ class LoaderSpec extends SparkSpec {
   }
 
   private def tmpDir(): Path = Files.createTempDirectory("graft-loader-spec")
+
+  /** The directory's files as in-memory uploads (name, bytes). */
+  private def uploadsOf(dir: Path): Seq[(String, Array[Byte])] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.map(p => (p.getFileName.toString, Files.readAllBytes(p))).toVector
+    finally s.close()
+  }
 
   test("full pipeline: discover -> validate -> load -> coerce -> sort -> clean names") {
     val dir = tmpDir()
@@ -89,6 +98,7 @@ class LoaderSpec extends SparkSpec {
     val loader = new TimeSeriesLoader(spark,
       tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
     assertThrows[DataLoadingException](loader.load(dir.toString))
+    assertThrows[DataLoadingException](loader.loadUploads(uploadsOf(dir)))
   }
 
   test("dtype mismatch across files raises (P5 pin :748-780: letters in a numeric column)") {
@@ -180,6 +190,58 @@ class LoaderSpec extends SparkSpec {
     assert(df.count() == 3)
     assert(df.select(sum(col("v"))).head().getDouble(0) == 7.5)
     assert(df.columns.contains("source_file"))
+    assert(df.schema("file_start_time").dataType == TimestampType)
+    // a name the extractor accepts but cannot parse fails the whole batch,
+    // as Discovery.extractAll does for files
+    val picky = new TimeMetadataExtractor() {
+      override def isValidFilename(filename: String): Boolean = true
+    }
+    assertThrows[FileParsingException](
+      new TimeSeriesLoader(spark, extractor = picky)
+        .loadUploads(uploads :+ ("unparseable.csv" -> "timestamp;v\n".getBytes("UTF-8"))))
+  }
+
+  test("a custom DataTransformer replaces the coercion on every entry point, " +
+    "once, over the whole frame with its metadata columns") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+    val tagged = new DataTransformer {
+      override def transform(df: DataFrame, timestampColumn: Option[String],
+          loading: LoadingConfig) = {
+        calls.incrementAndGet()
+        new DefaultDataTransformer().transform(df, timestampColumn, loading)
+          .withColumn("day", substring(col("source_file"), 1, 10))
+      }
+    }
+    val loader = PipelineBuilder(spark)
+      .withTimeSeriesConfig(TimeSeriesConfig(strategy = ValidationStrategy.None_))
+      .withTransformer(tagged)
+      .build()
+    val (metas, stats) = loader.discoverAndValidate(dir.toString)
+    val entries = Seq(
+      "load" -> loader.load(dir.toString),
+      "loadFiles" -> loader.loadFiles(metas, Some(stats)),
+      "loadPaths" -> loader.loadPaths(metas.map(_.filepath)),
+      "loadUploads" -> loader.loadUploads(uploadsOf(dir)))
+    assert(calls.get == entries.size, "one transform call per load")
+    for ((entry, loaded) <- entries) {
+      val days = loaded.df.select("day").distinct().collect().map(_.getString(0))
+      assert(days.toSeq == Seq("01-01-2024"), entry)
+      assert(loaded.df.select(sum(col("humidity"))).head().getDouble(0) == 65.0, entry)
+    }
+  }
+
+  test("encoding decodes the header check too: an ISO-8859-1 header loads") {
+    val dir = tmpDir()
+    Files.write(dir.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
+      "timestamp;Température\n01/01/2024 00:00;1.5\n".getBytes("ISO-8859-1"))
+    val loader = new TimeSeriesLoader(spark,
+      loading = LoadingConfig(encoding = "ISO-8859-1"),
+      tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
+    for (loaded <- Seq(loader.load(dir.toString), loader.loadUploads(uploadsOf(dir)))) {
+      assert(loaded.df.select("Température").head().getDouble(0) == 1.5)
+    }
   }
 
   test("renameMap applies after trim, before prefix cleaning (C2 order)") {
@@ -197,13 +259,14 @@ class LoaderSpec extends SparkSpec {
     val dir = tmpDir()
     Files.writeString(dir.resolve("01-01-2024 00_00_00 - 01-01-2024 01_00_00.csv"),
       "timestamp;v\n01/01/2024 00:00;21,5\n01/01/2024 00:30;1.234\n")
-    val loaded = new TimeSeriesLoader(spark,
+    val loader = new TimeSeriesLoader(spark,
       loading = graft.core.LoadingConfig(decimal = ","),
       tsConfig = graft.core.TimeSeriesConfig(strategy = graft.core.ValidationStrategy.None_))
-      .load(dir.toString)
-    val vs = loaded.df.orderBy("timestamp").collect()
-      .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
-    assert(vs(0) == Some(21.5))
+    for (loaded <- Seq(loader.load(dir.toString), loader.loadUploads(uploadsOf(dir)))) {
+      val vs = loaded.df.orderBy("timestamp").collect()
+        .map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1)))
+      assert(vs(0) == Some(21.5))
+    }
   }
 
   test("originalColumnNames reads the header only (S5)") {
