@@ -4,6 +4,7 @@ import graft.core._
 import graft.meta._
 import graft.validate.{FileValidator, TimeSeriesValidator}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.io.{BufferedReader, ByteArrayInputStream, InputStream, InputStreamReader}
@@ -12,6 +13,20 @@ import java.util.regex.Pattern
 
 /** Loaded-corpus result (reference FileDataFrame.get_dataframe +
   * concat_metadata, load_file.py:1863-1878).
+  *
+  * `df` stays a lazy plan: building a `LoadedSeries` runs no job, and a
+  * caller that only writes `df` reads the CSV files once, in its own
+  * action. The analysis methods (`analyzeContinuity`, `resample`) and
+  * `concatMetadata` instead share one materialization of `df`, a
+  * `localCheckpoint` taken on the first of them to run: the files are
+  * scanned, joined to their metadata, parsed and sorted once, and every
+  * later analysis reads the checkpointed blocks (the reference's in-memory
+  * `self.dataframe`, load_file.py:1806). The blocks are freed by the
+  * ContextCleaner once this `LoadedSeries` and every frame derived from
+  * it are unreachable, so there is nothing to unpersist. Local-checkpoint
+  * blocks live on the executors and are lost with one: an analysis that
+  * runs after an executor loss fails instead of re-reading the files
+  * (ROADMAP D5 routes every checkpoint through one `Lineage` policy).
   */
 final case class LoadedSeries(
     df: DataFrame,
@@ -25,32 +40,50 @@ final case class LoadedSeries(
     // processing_stats.outliers_removed) after load
     hookContext: Map[String, Any] = Map.empty
 ) {
+  /** The rows of `df`, computed once, on first use (see the class doc). */
+  private lazy val materialized: DataFrame = df.localCheckpoint(eager = true)
+
   /** A4 concat metadata. The reference computes end_time with min() — a bug
     * (load_file.py:1873-1875); we implement the documented max().
+    * `size_in_bytes` is what the materialized rows occupy in the block
+    * store (memory plus disk), the analogue of the reference's
+    * memory_usage(deep=True); a plan-statistics estimate would size the
+    * metadata join as scan bytes times table bytes, growing with the square
+    * of the file count.
     */
   def concatMetadata: Map[String, Any] = Map(
     "total_files" -> files.size,
+    "total_rows" -> materialized.count(),
     "start_time" -> files.flatMap(_.startTime).sortBy(_.getTime).headOption,
     "end_time" -> files.flatMap(_.endTime).sortBy(_.getTime).lastOption,
-    "size_in_bytes" -> df.queryExecution.optimizedPlan.stats.sizeInBytes
+    "size_in_bytes" -> materializedBytes
   )
+
+  private def materializedBytes: Long = {
+    val rddId = materialized.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
+    rddId.flatMap(id => df.sparkSession.sparkContext.getRDDStorageInfo.find(_.id == id))
+      .fold(0L)(info => info.memSize + info.diskSize)
+  }
 
   private def tsColOrThrow: String = timestampColumn.getOrElse(
     throw new TimeValidationException("no timestamp column detected"))
 
   /** Reference analyze_time_series_continuity (load_file.py:2024-2125) as a
-    * method on the loaded corpus.
+    * method on the loaded corpus; reads the shared materialization.
     */
   def analyzeContinuity(
       expectedFrequency: Option[String] = None,
       minGapSize: String = "1min"
-  ): graft.ts.Continuity.ContinuityReport =
-    graft.ts.Continuity.analyze(df, tsColOrThrow,
+  ): graft.ts.Continuity.ContinuityReport = {
+    val tsCol = tsColOrThrow // before the materialization runs a job
+    graft.ts.Continuity.analyze(materialized, tsCol,
       expectedFrequency.map(graft.core.Offsets.parse),
       graft.core.Offsets.parse(minGapSize))
+  }
 
   /** Reference resample_time_series (load_file.py:2241-2360) as a method on
-    * the loaded corpus; original frame untouched.
+    * the loaded corpus; original frame untouched. The result is planned over
+    * the shared materialization, so executing it does not read the files.
     */
   def resample(
       frequency: String,
@@ -59,9 +92,11 @@ final case class LoadedSeries(
       fillLimit: Option[Int] = None,
       includeAllGaps: Boolean = true,
       maxGapSize: Option[String] = None
-  ): DataFrame =
-    graft.ts.Resample.resampleTimeSeries(df, tsColOrThrow, frequency,
+  ): DataFrame = {
+    val tsCol = tsColOrThrow
+    graft.ts.Resample.resampleTimeSeries(materialized, tsCol, frequency,
       methodResample, methodFill, fillLimit, includeAllGaps, maxGapSize)
+  }
 
   /** Reference generate_time_series_report (load_file.py:1023-1102). */
   def fileReport(config: TimeSeriesConfig = TimeSeriesConfig()): graft.meta.FileReport.TimeSeriesFileReport =

@@ -82,6 +82,16 @@ object Continuity {
       expected: Duration,
       minGap: Duration,
       seriesCols: Seq[String] = Nil
+  ): DataFrame =
+    gapRows(withDiff(df, tsCol, seriesCols), tsCol, expected, minGap, seriesCols)
+
+  /** The gap filter and projection over an already-diffed frame. */
+  private def gapRows(
+      diffed: DataFrame,
+      tsCol: String,
+      expected: Duration,
+      minGap: Duration,
+      seriesCols: Seq[String]
   ): DataFrame = {
     val thresholdUs = (expected.getSeconds + minGap.getSeconds) * 1000000L
     val selectCols: Seq[Column] =
@@ -92,7 +102,7 @@ object Continuity {
         (floor(col("diff_us") / lit(expected.getSeconds * 1000000L)) - lit(1))
           .cast("long").as("expected_points")
       )
-    withDiff(df, tsCol, seriesCols)
+    diffed
       .filter(col("diff_us") > lit(thresholdUs))
       .select(selectCols: _*)
   }
@@ -104,7 +114,10 @@ object Continuity {
       expected: Duration,
       minGap: Duration
   ): Seq[TimeSeriesGap] =
-    gapsDf(df, tsCol, expected, minGap)
+    collectGaps(gapsDf(df, tsCol, expected, minGap))
+
+  private def collectGaps(gapFrame: DataFrame): Seq[TimeSeriesGap] =
+    gapFrame
       .orderBy("gap_start")
       .collect()
       .map { r =>
@@ -118,7 +131,10 @@ object Continuity {
       .toVector
 
   /** Full continuity report (reference analyze_time_series_continuity,
-    * load_file.py:2024-2125). One agg for span + one window scan for gaps.
+    * load_file.py:2024-2125). The lagged diff is planned once: one
+    * aggregate over it gives the median diff (the inferred frequency, as in
+    * `inferFrequencySeconds`), the span and the point count, and one filter
+    * over it gives the gaps.
     */
   def analyze(
       df: DataFrame,
@@ -126,17 +142,23 @@ object Continuity {
       expectedFrequency: Option[Duration] = None,
       minGapSize: Duration = Duration.ofMinutes(1)
   ): ContinuityReport = {
-    val expected = expectedFrequency
-      .orElse(inferFrequencySeconds(df, tsCol).map(Duration.ofSeconds))
-      .getOrElse(Duration.ofSeconds(1))
-    val statsRow = df
-      .agg(min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"), count(lit(1)).as("n"))
+    val diffed = withDiff(df, tsCol)
+    val medianDiff =
+      if (expectedFrequency.isDefined) lit(null).cast("double")
+      else median(col("diff_us")) // nulls (the first row) are ignored
+    val statsRow = diffed
+      .agg(medianDiff.as("m"), min(col(tsCol)).as("mn"), max(col(tsCol)).as("mx"),
+        count(lit(1)).as("n"))
       .head()
-    val n = statsRow.getLong(2)
+    val expected = expectedFrequency
+      .orElse(Option.when(!statsRow.isNullAt(0))(
+        Duration.ofSeconds((statsRow.getDouble(0) / 1e6).toLong)))
+      .getOrElse(Duration.ofSeconds(1))
+    val n = statsRow.getLong(3)
     val span =
-      if (statsRow.isNullAt(0) || statsRow.isNullAt(1)) None
-      else Some(Duration.ofMillis(statsRow.getTimestamp(1).getTime - statsRow.getTimestamp(0).getTime))
-    val gapList = gaps(df, tsCol, expected, minGapSize)
+      if (statsRow.isNullAt(1) || statsRow.isNullAt(2)) None
+      else Some(Duration.ofMillis(statsRow.getTimestamp(2).getTime - statsRow.getTimestamp(1).getTime))
+    val gapList = collectGaps(gapRows(diffed, tsCol, expected, minGapSize, Nil))
     val gapTotal = gapList.foldLeft(Duration.ZERO)((acc, g) => acc.plus(g.duration))
     val coverage = span match {
       case Some(s) if s.toMillis > 0 =>

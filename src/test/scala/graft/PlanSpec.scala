@@ -2,6 +2,7 @@ package graft
 
 import graft.ts.{AsOf, Fill}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Plan-quality regression guards: these assert the SHAPE of the physical
   * plan, not results — the properties that silently rot (pushdown lost, an
@@ -85,6 +86,46 @@ class PlanSpec extends SparkSpec {
     // a long key, so the driver keeps a LongHashedRelation, not a 16 MB page
     assert("""HashedRelationBroadcastMode\(List\(input\[\d+, bigint""".r.findFirstIn(plan).isDefined,
       s"metadata broadcast not keyed by a long:\n$plan")
+  }
+
+  test("analyzeContinuity and resample on a loaded corpus read its one " +
+    "materialization: the only plan that scans the CSV files is the localCheckpoint") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-analyze")
+    (0 until 3).foreach { h =>
+      java.nio.file.Files.writeString(
+        dir.resolve(f"01-01-2024 $h%02d_00_00 - 01-01-2024 $h%02d_59_59.csv"),
+        f"timestamp;v\n01/01/2024 $h%02d:00;$h.0\n01/01/2024 $h%02d:10;$h.5\n")
+    }
+    val loaded = new graft.load.TimeSeriesLoader(spark,
+      tsConfig = graft.core.TimeSeriesConfig(
+        strategy = graft.core.ValidationStrategy.None_))
+      .load(dir.toString)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        seen.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit =
+        seen.add(funcName -> qe.toString)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      loaded.analyzeContinuity()
+      loaded.resample("10min", Some("mean"), Some("ffill")).collect()
+      // the bus delivers in order: once the marker query arrives, every
+      // query of the two calls above has been seen
+      spark.sql("SELECT 1 AS graft_plan_marker").collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_._2.contains("graft_plan_marker")) &&
+        System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = seen.asScala.toVector
+    assert(plans.exists(_._2.contains("graft_plan_marker")), "listener events not delivered")
+    assert(plans.size > 3, s"too few plans captured: ${plans.map(_._1)}")
+    val scans = plans.filter(_._2.contains("FileScan csv"))
+    assert(scans.map(_._1) == Seq("localCheckpoint"),
+      s"CSV scans outside the one materialization:\n${scans.mkString("\n")}")
   }
 
   test("co-bucketed tables join WITHOUT a shuffle exchange") {

@@ -293,6 +293,48 @@ class LoaderSpec extends SparkSpec {
     assert(fr.totalFiles == 2 && fr.coveragePercent == 100.0)
   }
 
+  test("the analysis methods read one materialization, not the files: " +
+    "resample still answers after the CSVs are deleted") {
+    val dir = tmpDir()
+    writeFixture(dir)
+    val loaded = new TimeSeriesLoader(spark,
+      tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
+      .load(dir.toString)
+    assert(loaded.analyzeContinuity().totalPoints == 4)
+    val s = Files.list(dir)
+    try s.iterator().asScala.foreach(Files.delete) finally s.close()
+    val rows = loaded.resample("30min", Some("mean"))
+      .select("timestamp", "Temp", "humidity").orderBy("timestamp").collect()
+    // right-closed buckets labelled by their left edge, first point in the first bucket
+    assert(rows.map(_.toSeq).toSeq == Seq(
+      Seq(ts("2024-01-01 00:00:00"), 20.75, 30.0),
+      Seq(ts("2024-01-01 00:30:00"), 22.0, 35.0),
+      Seq(ts("2024-01-01 01:00:00"), 23.0, null),
+      Seq(ts("2024-01-01 01:30:00"), null, null)))
+  }
+
+  test("concatMetadata: total_rows, and size_in_bytes of the materialized rows " +
+    "(A4, reference memory_usage(deep=True))") {
+    val dir = tmpDir()
+    (0 until 20).foreach { h =>
+      val rows = (0 until 60).map(m => f"01/01/2024 $h%02d:$m%02d;${h * 60 + m}.25;${m % 7}.5")
+      Files.writeString(dir.resolve(f"01-01-2024 $h%02d_00_00 - 01-01-2024 $h%02d_59_59.csv"),
+        ("timestamp;Temp;humidity" +: rows).mkString("", "\n", "\n"))
+    }
+    val csvBytes = {
+      val s = Files.list(dir)
+      try s.iterator().asScala.map(Files.size).sum finally s.close()
+    }
+    val loaded = new TimeSeriesLoader(spark,
+      tsConfig = TimeSeriesConfig(strategy = ValidationStrategy.None_))
+      .load(dir.toString)
+    val meta = loaded.concatMetadata
+    assert(meta("total_rows") == loaded.df.count())
+    assert(meta("total_rows") == 1200L)
+    val size = meta("size_in_bytes").asInstanceOf[Long]
+    assert(size > 0 && size <= 10 * csvBytes, s"size_in_bytes $size for $csvBytes CSV bytes")
+  }
+
   test("PipelineBuilder wires all five extension points (reference create_pipeline)") {
     val dir = tmpDir()
     writeFixture(dir)

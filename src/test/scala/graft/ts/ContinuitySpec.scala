@@ -44,6 +44,30 @@ class ContinuitySpec extends SparkSpec {
     assert(r.coveragePercent == 100.0)
   }
 
+  test("analyze edge cases: empty, one row, all-equal timestamps, a null timestamp") {
+    def report(tss: Option[String]*) =
+      Continuity.analyze(tss.map(_.map(ts)).toDF("ts"), "ts")
+    val t0 = Some("2024-01-01 00:00:00")
+    // no diff to take a median of: the 1s fallback frequency
+    val empty = report()
+    assert(empty == Continuity.ContinuityReport(Some("1s"), None, Nil, Duration.ZERO, 100.0, 0L))
+    val one = report(t0)
+    assert(one == Continuity.ContinuityReport(Some("1s"), Some(Duration.ZERO), Nil,
+      Duration.ZERO, 100.0, 1L))
+    // a zero median diff infers "0s"; no diff exceeds the 1min gap threshold
+    val equal = report(t0, t0, t0)
+    assert(equal == Continuity.ContinuityReport(Some("0s"), Some(Duration.ZERO), Nil,
+      Duration.ZERO, 100.0, 3L))
+    // a row whose timestamp failed to parse still counts as a point
+    val withNull = report(None +: Seq(0, 1, 2, 3, 6).map(h => Some(f"2024-01-01 $h%02d:00:00")): _*)
+    assert(withNull.inferredFrequency == Some("3600s"))
+    assert(withNull.totalSpan == Some(Duration.ofHours(6)))
+    assert(withNull.gaps.map(g => (g.start, g.end, g.expectedPoints)) ==
+      Seq((ts("2024-01-01 03:00:00"), ts("2024-01-01 06:00:00"), 2L)))
+    assert(math.abs(withNull.coveragePercent - 50.0) < 1e-9)
+    assert(withNull.totalPoints == 6)
+  }
+
   test("per-series gap scan partitions by key") {
     val df = Seq(
       ("a", ts("2024-01-01 00:00:00")),
